@@ -54,17 +54,26 @@ package object functions {
     GraftShim.column(ByteStats(GraftShim.expression(c)))
 
   /** Per-subspace argmin PQ codeword indices against a constant
-    * codebook (first minimum wins). */
+    * codebook (first minimum wins). A null array yields null; a null or
+    * NaN ELEMENT throws IllegalArgumentException (the query fails) —
+    * unlike the SQL higher-order functions this kernel replaces, which
+    * propagated null and ordered NaN as the maximum. */
   def pq_encode(c: Column, cb: Seq[Seq[Seq[Double]]]): Column =
     GraftShim.column(PqEncode(GraftShim.expression(c), cb))
 
   /** Embedding → exact integer milli-units (round half-up per
-    * element), the similarity family's ingest quantization. */
+    * element), the similarity family's ingest quantization. A null array
+    * yields null; a null ELEMENT throws IllegalArgumentException (the
+    * query fails), where the `transform` it replaces propagated null.
+    * NaN does NOT throw: like `cast(round(NaN) as long)` it quantizes to
+    * 0, and ±Infinity clamps to Long.MaxValue/MinValue. */
   def quantize_milli(c: Column): Column =
     GraftShim.column(QuantizeMilli(GraftShim.expression(c)))
 
   /** Per-query ADC lookup table (PqM×PqK subspace dots) against a
-    * constant codebook. */
+    * constant codebook. A null array yields null; a null or NaN ELEMENT
+    * throws IllegalArgumentException (the query fails), where the SQL
+    * higher-order functions it replaces propagated null / NaN. */
   def pq_lut(c: Column, cb: Seq[Seq[Seq[Double]]]): Column =
     GraftShim.column(PqLut(GraftShim.expression(c), cb))
 

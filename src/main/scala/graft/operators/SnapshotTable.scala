@@ -2,14 +2,14 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-import graft.sources.Tables
+import graft.sources.{ParquetFooters, Tables}
 
 /** A minimal manifest-committed snapshot table — the primitive set a
   * table format (Delta/Iceberg) is built from, answering what x6's
@@ -568,10 +568,6 @@ object SnapshotTable {
     * job. Row-group statistics min/max over an INT64 column; a file
     * whose footer carries no usable stats degrades to the never-pruned
     * sentinel entry rather than failing the commit. */
-  // one Configuration for every footer read: construction parses the
-  // Hadoop XML resource chain (~100ms), pure waste per-file
-  private lazy val hadoopConf = new Configuration()
-
   private[graft] def footerEntry(root: String, rel: String, keyCol: String): FileEntry =
     footerEntryMulti(root, rel, keyCol, Nil)
 
@@ -650,13 +646,8 @@ object SnapshotTable {
     import scala.jdk.CollectionConverters._
     dv.filterNot { case (r, _) => exclude.contains(r) }
       .toSeq.sortBy(_._1).map { case (r, d) =>
-        counts.getOrElse(r, {
-          val in = HadoopInputFile.fromPath(
-            new HadoopPath(Paths.get(root, d).toUri), hadoopConf)
-          val rd = ParquetFileReader.open(in)
-          try rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally rd.close()
-        })
+        counts.getOrElse(r,
+          withFooter(root, d)(_.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
       }.sum
   }
 
@@ -673,19 +664,14 @@ object SnapshotTable {
       f: org.apache.parquet.hadoop.ParquetFileReader => T): T =
     withFooterLen(root, rel)((r, _) => f(r))
 
-  /** [[withFooter]] plus the file's byte LENGTH — already known to the
-    * open (HadoopInputFile wraps the FileStatus the footer locate
-    * needs), so harvesting it costs ZERO extra metadata calls. A
-    * separate Files.size here would be a second HEAD request per
-    * committed file on object storage — doubling exactly the request
-    * class the manifest-carried sizes exist to eliminate. */
+  /** [[withFooter]] plus the file's byte LENGTH, from the same open
+    * ([[ParquetFooters.withFooter]]). A separate Files.size here would
+    * be a second HEAD request per committed file on object storage —
+    * doubling exactly the request class the manifest-carried sizes
+    * exist to eliminate. */
   private def withFooterLen[T](root: String, rel: String)(
-      f: (org.apache.parquet.hadoop.ParquetFileReader, Long) => T): T = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try f(reader, in.getLength) finally reader.close()
-  }
+      f: (org.apache.parquet.hadoop.ParquetFileReader, Long) => T): T =
+    ParquetFooters.withFooter(new HadoopPath(Paths.get(root, rel).toUri))(f)
 
   /** Per-file stats harvest from an OPEN footer. Beyond the declared
     * primary `keyCol` and any explicit `extraCols`, min/max is
@@ -792,7 +778,10 @@ object SnapshotTable {
     }
     Files.move(tmp, manifestPath(root, v), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
-    val ptmp = Paths.get(root, "._latest.tmp")
+    // the pointer's temp name is per-commit unique for the same reason:
+    // with a shared one, a racing committer's write truncates it between
+    // this write and move, publishing an EMPTY `_latest`
+    val ptmp = Paths.get(root, s"._latest.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     Files.write(ptmp, v.toString.getBytes)
     Files.move(ptmp, Paths.get(root, "_latest"), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
@@ -801,12 +790,13 @@ object SnapshotTable {
 
   /** Read a pinned version — time travel, and the isolation guarantee:
     * the file list is resolved ONCE; later commits add files and new
-    * manifests but never touch these. A version whose metadata carries
-    * a `schema` key holds files of MIXED widths (add-column evolution,
-    * x18): only then is parquet schema merging paid — resolving the
-    * union schema footer-reads every file at planning time, so an
-    * unevolved table (the overwhelmingly common case at 100 TB) keeps
-    * its single-footer planning cost. */
+    * manifests but never touch these. Planning launches no Spark job
+    * ([[planSchema]]): an unevolved table (the overwhelmingly common
+    * case at 100 TB) plans from ONE footer read in-process, a
+    * widening commit's captured union from zero. Only an evolved
+    * version (a `schema` key: files of MIXED widths, x18) whose union
+    * no writer captured still pays parquet schema merging — a footer
+    * job over every file at planning time. */
   def readAt(s: SparkSession, root: String, v: Int): DataFrame =
     // user-facing reads resolve the column mapping AS OF the snapshot
     // (rename/drop evolution, see colMap): renamed columns surface
@@ -2388,15 +2378,11 @@ object SnapshotTable {
   /** Does the parquet footer of `rel` declare a `name` column? One
     * driver-side metadata read — used to split a row-tracked scan into
     * files with materialized ids and files on the base+position rule. */
-  private[graft] def footerHasColumn(root: String, rel: String, name: String): Boolean = {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(Paths.get(root, rel).toString), hadoopConf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+  private[graft] def footerHasColumn(root: String, rel: String, name: String): Boolean =
+    withFooter(root, rel) { reader =>
       import scala.jdk.CollectionConverters._
       reader.getFileMetaData.getSchema.getFields.asScala.exists(_.getName == name)
-    } finally reader.close()
-  }
+    }
 
   /** The row-tracked read: every logical column plus `_row_id` =
     * coalesce(materialized __row_id, file base + row position).
@@ -2436,13 +2422,12 @@ object SnapshotTable {
     * materializes every id it carries forward. */
   private[graft] def relsWithIds(s: SparkSession, root: String, v: Int,
       rels: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
     val bases = rowBases(root, v)
     val dv = dvState(root, v)
     val basesDf = {
       import s.implicits._
       broadcast(bases.toSeq.map { case (r, b) =>
-        (Paths.get(r).getFileName.toString, b) }.toDF("__rt_file", "__rt_base"))
+        (fileKey(root, r), b) }.toDF("__rt_file", "__rt_base"))
     }
     val mat = rowMatOf(manifestMeta(root, v))
     val (withIds, plain) = rels.partition(mat.contains)
@@ -2456,7 +2441,7 @@ object SnapshotTable {
         // metadata-added column null-fills instead of silently
         // vanishing (r14 review)
         val df0 =
-          if (!materialized) subsetReader(s, root, v).parquet(paths: _*)
+          if (!materialized) scanRels(s, root, v, rs)
           else {
             val phys = readAtPhysical(s, root, v).schema
             val schema = org.apache.spark.sql.types.StructType(
@@ -2466,7 +2451,7 @@ object SnapshotTable {
             s.read.schema(schema).parquet(paths: _*)
           }
         val withPos = df0
-          .withColumn("__rt_file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
+          .withColumn("__rt_file", col("_metadata.file_path"))
           .withColumn("__rt_idx", col("_metadata.row_index"))
         val rsDv = rs.filter(dv.contains)
         val filtered = dvSidecars(s, root, dv, rsDv, "__rt_idx", "__rt_file") match {
@@ -2830,102 +2815,130 @@ object SnapshotTable {
     result
   }
 
-  /** DV-aware subset read (PHYSICAL names): files without a deletion
-    * vector read on the plain path; files with one read alongside
-    * `_metadata` and anti-join their (file, ordinal) pairs against the
-    * sidecar contents — the sidecars total exactly the deleted rows,
-    * so the anti-join broadcasts. Join key is the file BASENAME (rels
-    * are uuid-tagged and unique within a table). Zero overhead when
-    * the version has no DVs (the overwhelmingly common case). */
+  /** `root/rel` as Spark's file index qualifies it: its `toString`
+    * orders files the way parquet schema inference samples them. */
+  private def qualifiedPath(root: String, rel: String): HadoopPath = {
+    val p = new HadoopPath(Paths.get(root, rel).toString)
+    p.getFileSystem(ParquetFooters.hadoopConf).makeQualified(p)
+  }
+
+  /** The deletion-vector join key of `rel`: its full `_metadata.file_path`
+    * (Spark's extractor re-parses the qualified path's string form).
+    * Base names are not unique within a version — shallow-clone rels
+    * reach into another table's directory, and tags are 8 hex chars — so
+    * a base-name key could hand one file's deleted ordinals to another. */
+  private[graft] def fileKey(root: String, rel: String): String =
+    new HadoopPath(qualifiedPath(root, rel).toString).toUri.toString
+
+  /** The one schema every DV sidecar carries. */
+  private val DvSidecarSchema = StructType(Seq(StructField("idx", LongType)))
+
   /** ONE parquet relation over the sidecars of `rels` (those with an
-    * entry in `dv`), emitting (`idxName`, `fileName` = data-file base
-    * name) — the frame every DV exclusion anti-join broadcasts. The
-    * sidecar file name → data-file base mapping is recovered through a
-    * tiny broadcast join on `_metadata.file_path`. Replaces the
-    * one-relation-PER-sidecar unionByName reduce the read/MoR paths
-    * used to build: per-relation plan cost (file status, footer,
-    * analysis) grows with the DV'd file count and is pure driver-side
-    * wait — same rows, same anti-join semantics. None when no rel
-    * carries a sidecar. */
+    * entry in `dv`), emitting (`idxName`, `fileName` = the data file's
+    * [[fileKey]]) — the frame every DV exclusion anti-join broadcasts
+    * against `_metadata.file_path` of the data scan. The sidecar →
+    * data-file mapping is recovered through a tiny broadcast join on the
+    * sidecar's own `_metadata.file_path`. One relation instead of one
+    * per sidecar: per-relation plan cost (file status, footer,
+    * analysis) would grow with the DV'd file count as pure planning-time
+    * wait. None when no rel carries a sidecar. */
   private def dvSidecars(s: SparkSession, root: String,
       dv: Map[String, String], rels: Seq[String],
       idxName: String, fileName: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
     import s.implicits._
-    // sidecar rels may carry subpath components (a shallow clone
-    // references the source's sidecars through its rel), so the READ
-    // path keeps the full rel; the join key is the sidecar's base name
-    // (what _metadata.file_path yields), unique by uuid tag
-    val pairs = rels.distinct.sorted.flatMap(r => dv.get(r).map(dvRel =>
-      (dvRel, Paths.get(r).getFileName.toString)))
+    val pairs = rels.distinct.sorted.flatMap(r => dv.get(r).map(dvRel => (dvRel, r)))
     if (pairs.isEmpty) None
-    else Some(s.read.parquet(pairs.map(p => Paths.get(root, p._1).toString): _*)
-      .withColumn("__dv_side", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-      .join(broadcast(pairs.map(p =>
-          (Paths.get(p._1).getFileName.toString, p._2)).toDF("__dv_side", fileName)),
-        "__dv_side")
+    else Some(s.read.schema(DvSidecarSchema)
+      .parquet(pairs.map(p => Paths.get(root, p._1).toString): _*)
+      .withColumn("__dv_side", col("_metadata.file_path"))
+      .join(broadcast(pairs.map { case (d, r) => (fileKey(root, d), fileKey(root, r)) }
+        .toDF("__dv_side", fileName)), "__dv_side")
       .select(col("idx").as(idxName), col(fileName)))
   }
 
+  /** DV-aware subset read (PHYSICAL names): files without a deletion
+    * vector read on the plain path; files with one read alongside
+    * `_metadata` and anti-join their (file path, ordinal) pairs against
+    * the sidecar contents — the sidecars total exactly the deleted rows,
+    * so the anti-join broadcasts. Zero overhead when the version has no
+    * DVs (the overwhelmingly common case). `footers` as in [[scanRels]]. */
   private[graft] def readRelsDv(s: SparkSession, root: String, v: Int,
-      rels: Seq[String]): DataFrame = {
+      rels: Seq[String], footers: Map[String, ParquetMetadata] = Map.empty): DataFrame = {
     val dv = dvState(root, v)
-    val paths = rels.map(r => Paths.get(root, r).toString)
-    val withDv = rels.filter(dv.contains)
-    if (withDv.isEmpty) subsetReader(s, root, v).parquet(paths: _*)
+    val (withDv, plain) = rels.partition(dv.contains)
+    if (withDv.isEmpty) scanRels(s, root, v, rels, footers)
     else {
-      import org.apache.spark.sql.functions.{element_at, split => fsplit}
       // ONLY the DV'd files pay the anti-join; the rest stay a plain
       // scan (measured 7× cheaper at the 8× probe) — the common shape
       // is one point-deleted file in a sea of untouched ones
-      val dvd = subsetReader(s, root, v)
-        .parquet(withDv.map(r => Paths.get(root, r).toString): _*)
+      val dvd = scanRels(s, root, v, withDv, footers)
       val cols = dvd.columns.toIndexedSeq
       val pairs = dvSidecars(s, root, dv, withDv, "__dv_idx", "__dv_file").get
       val filtered = dvd
-        .withColumn("__dv_file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
+        .withColumn("__dv_file", col("_metadata.file_path"))
         .withColumn("__dv_idx", col("_metadata.row_index"))
         .join(broadcast(pairs), Seq("__dv_file", "__dv_idx"), "left_anti")
         .select(cols.map(col): _*)
-      val plain = rels.filterNot(dv.contains)
       if (plain.isEmpty) filtered
-      else subsetReader(s, root, v)
-        .parquet(plain.map(r => Paths.get(root, r).toString): _*)
+      else scanRels(s, root, v, plain, footers)
         .unionByName(filtered, allowMissingColumns = true)
     }
   }
 
-  /** Reader honoring the evolution markers, cheapest first:
-    * `schemaJson` — the union schema CAPTURED AT THE WIDENING COMMIT
-    * (Delta's design: the log, not the files, owns the schema) — makes
-    * planning zero-footer and zero-job at any file count; `schema`
-    * alone falls back to parquet mergeSchema inference (a distributed
-    * footer job per scan — the pre-r11 path, kept for evolved tables
-    * whose union no writer captured); unmarked tables read plain (one
-    * footer). */
-  private def evolvedReader(s: SparkSession, root: String, v: Int) = {
+  /** The plain parquet relation (PHYSICAL names, no deletion vectors)
+    * over `rels` of version `v` — the one way a snapshot scan is built.
+    * It plans under an explicit schema from [[planSchema]], so building
+    * it launches no Spark job. A SUBSET of an evolved version must be
+    * read through here too: sampling one footer of a mixed-width subset
+    * would silently drop the evolved columns of wider files — the bug
+    * class deleteWhere hit in r9 (ADVICE), which applies to every
+    * pruned/merge/diff read alike. `footers` lends footers the caller
+    * already holds (rel → footer), so no file is opened twice. */
+  private[graft] def scanRels(s: SparkSession, root: String, v: Int,
+      rels: Seq[String], footers: Map[String, ParquetMetadata] = Map.empty): DataFrame = {
+    val paths = rels.map(r => Paths.get(root, r).toString)
+    planSchema(s, root, v, rels, footers) match {
+      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+      case None => s.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
+  /** The data schema a scan of `rels` at version `v` plans under,
+    * cheapest first:
+    *   - `schemaJson`: the union schema CAPTURED AT THE WIDENING COMMIT
+    *     (Delta's design: the log, not the files, owns the schema) —
+    *     zero footers at any file count;
+    *   - the `schema` marker alone (an evolved version whose union no
+    *     writer captured): None — the caller merges every footer
+    *     (`mergeSchema`, a footer job per scan);
+    *   - any other version: ONE footer read in-process — the file
+    *     Spark's own inference samples (the first by qualified path),
+    *     through Spark's own footer → schema rule, so the schema equals
+    *     `spark.read.parquet(rels)`'s. An empty subset (a prune-to-zero
+    *     scan) samples the version's files the same way: unmarked
+    *     versions are uniform. */
+  private[graft] def planSchema(s: SparkSession, root: String, v: Int,
+      rels: Seq[String], footers: Map[String, ParquetMetadata] = Map.empty): Option[StructType] = {
     val meta = if (v > 0) manifestMeta(root, v) else Map.empty[String, String]
     meta.get("schemaJson") match {
-      case Some(js) => s.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None if meta.contains("schema") => s.read.option("mergeSchema", "true")
-      case None => s.read
+      case Some(js) => Some(DataType.fromJson(js).asInstanceOf[StructType])
+      case None if meta.contains("schema") => None
+      case None =>
+        val pool = if (rels.nonEmpty) rels else manifestEntries(root, v).map(_.rel)
+        require(pool.nonEmpty, s"snapshot read on $root: version $v has no " +
+          "file entries and no schema capture — unreadable empty state")
+        val rel = pool.minBy(r => qualifiedPath(root, r).toString)
+        val path = qualifiedPath(root, rel)
+        Some(footers.get(rel) match {
+          case Some(f) => GraftParquetShim.footerSchema(s, path, f)
+          case None => ParquetFooters.withFooter(path)((r, _) =>
+            GraftParquetShim.footerSchema(s, path, r.getFooter))
+        })
     }
   }
 
   def read(s: SparkSession, root: String): DataFrame =
     readAt(s, root, currentVersion(root))
-
-  /** The reader every file-SUBSET scan of version `v` must use:
-    * evolved versions (the `schema` marker) resolve the union schema
-    * via mergeSchema exactly as [[readAt]] does for the whole version.
-    * Without this a mixed-width subset samples ONE footer, and rows
-    * from wider files silently lose their evolved-column values — the
-    * bug class deleteWhere hit in r9 (ADVICE) applies to every
-    * pruned/merge/diff read alike. */
-  private[graft] def subsetReader(s: SparkSession, root: String, v: Int) =
-    evolvedReader(s, root, v)
 
   /** Planning step of a stats-pruned scan: the entries of version `v`
     * whose [lo, hi] key range intersects [qlo, qhi]. Pure manifest
@@ -4059,9 +4072,7 @@ object SnapshotTable {
         Some(org.apache.spark.sql.types.DataType.fromJson(carried("schemaJson"))
           .asInstanceOf[org.apache.spark.sql.types.StructType])
       else if (affected.nonEmpty) Some(old0.schema)
-      else Some(subsetReader(s, root, v)
-        .parquet(Paths.get(root, untouched.head.rel).toString)
-        .filter(lit(false)).schema)
+      else planSchema(s, root, v, Seq(untouched.head.rel))
     // priorStruct names are PHYSICAL (captures describe files) —
     // translate for the comparison against the changeset's logical cols
     val tableColsOrdered: Seq[String] =
@@ -4633,7 +4644,7 @@ object SnapshotTable {
     * current version (Delta's no-op contract). SET may only name
     * existing columns — UPDATE never changes the schema, so evolution
     * markers carry through unchanged (rewritten files of an evolved
-    * table land at the union width via [[subsetReader]], which the
+    * table land at the union width via [[scanRels]], which the
     * markers already describe). */
   /** UPDATE's phase-1 plan, a named seam so PlanSpec can assert the
     * predicate actually reaches the parquet scan (`PushedFilters`) —
@@ -4648,9 +4659,7 @@ object SnapshotTable {
     * handled downstream as zero new hits). Shared by update/delete. */
   private def rawLogicalScan(s: SparkSession, root: String, v: Int,
       entries: Seq[FileEntry]): DataFrame =
-    toLogical(subsetReader(s, root, v)
-      .parquet(entries.map(e => Paths.get(root, e.rel).toString): _*),
-      colMap(root, v))
+    toLogical(scanRels(s, root, v, entries.map(_.rel)), colMap(root, v))
 
   /** The manifest entries named by `input_file_name`'s URI set. Entry
     * paths are normalized before matching because a SHALLOW CLONE's
@@ -4713,16 +4722,13 @@ object SnapshotTable {
     * REQUIRED would become mixed-repetition (the uniform-table read
     * path requests one file's declarations against all, and parquet
     * refuses a required column through an optional request). */
-  private def fileNullability(root: String, rel: String): Map[String, Boolean] = {
-    import scala.jdk.CollectionConverters._
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(f => f.getName ->
-        !f.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED)).toMap
-    finally r.close()
-  }
+  private def fileNullability(root: String, rel: String): Map[String, Boolean] =
+    withFooter(root, rel) { r =>
+      import scala.jdk.CollectionConverters._
+      r.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(f => f.getName ->
+          !f.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED)).toMap
+    }
 
   /** Conform `df`'s per-column nullability to `nn` (physical names):
     * columns the resident files declare REQUIRED are wrapped in
@@ -4767,7 +4773,6 @@ object SnapshotTable {
       cdcRows: Option[DataFrame => DataFrame],
       postFiles: (DataFrame, String) => Seq[FileEntry],
       rowTracked: Boolean = false): Option[Int] = {
-    import org.apache.spark.sql.functions.{element_at, split => fsplit}
     val dvCur = dvState(root, v)
     // metadata columns must come off the RAW scan (they don't resolve
     // across joins); already-DV'd ordinals are excluded by an explicit
@@ -4780,8 +4785,7 @@ object SnapshotTable {
     // (or none), and mergeSchema refuses mixed widths — the explicit
     // schema null-fills positional files and upcasts narrower slots.
     val rawPhys =
-      if (!rowTracked) subsetReader(s, root, v)
-        .parquet(touched.map(e => Paths.get(root, e.rel).toString): _*)
+      if (!rowTracked) scanRels(s, root, v, touched.map(_.rel))
       else {
         val phys = readAtPhysical(s, root, v).schema
         val schema = org.apache.spark.sql.types.StructType(
@@ -4792,7 +4796,7 @@ object SnapshotTable {
           .parquet(touched.map(e => Paths.get(root, e.rel).toString): _*)
       }
     val raw = toLogicalFull(rawPhys, map)
-      .withColumn("__file", element_at(fsplit(col("_metadata.file_path"), "/"), -1))
+      .withColumn("__file", col("_metadata.file_path"))
       .withColumn("__idx", col("_metadata.row_index"))
     // one relation over ALL relevant sidecars (dvSidecars) instead of
     // one per sidecar union-reduced — driver-side plan cost no longer
@@ -4810,7 +4814,8 @@ object SnapshotTable {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // every live match was already DV'd: version no-op
     if (hitCounts.isEmpty) return Some(v)
-    val byBase = touched.map(e => Paths.get(e.rel).getFileName.toString -> e).toMap
+    // hits are keyed by full file path ([[fileKey]])
+    val byPath = touched.map(e => fileKey(root, e.rel) -> e).toMap
     // hit files' existing sidecars, read ONCE (checkpointed — they
     // total the already-deleted rows): one count job serves the
     // selectivity cap, and the same frame feeds the superseding
@@ -4818,15 +4823,15 @@ object SnapshotTable {
     val oldSides: Option[DataFrame] =
       // lazy checkpoint: the oldCounts job right below materializes it
       dvSidecars(s, root, dvCur,
-        hitCounts.keys.toSeq.map(b => byBase(b).rel), "idx", "__file")
+        hitCounts.keys.toSeq.map(byPath(_).rel), "idx", "__file")
         .map(_.localCheckpoint(false))
     val oldCounts: Map[String, Long] = oldSides.fold(Map.empty[String, Long])(
       _.groupBy("__file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val underCap = hitCounts.forall { case (base, n) =>
-      val e = byBase(base)
+    val underCap = hitCounts.forall { case (path, n) =>
+      val e = byPath(path)
       e.rows > 0 &&
-        (oldCounts.getOrElse(base, 0L) + n).toDouble / e.rows <= DvMaxSelectivity
+        (oldCounts.getOrElse(path, 0L) + n).toDouble / e.rows <= DvMaxSelectivity
     }
     if (!underCap) return None // fall back to copy-on-write
     // AGGREGATE cap (ADVICE r13, widened to TABLE scope in r16): the
@@ -4848,7 +4853,7 @@ object SnapshotTable {
     // of broadcast longs
     val dvBudget = s.conf.get("spark.graft.dv.maxTotalOrdinals",
       DvMaxTotalOrdinals.toString).toLong
-    val touchedRels = hitCounts.keys.map(b => byBase(b).rel).toSet
+    val touchedRels = hitCounts.keys.map(byPath(_).rel).toSet
     // untouched sidecars price from the manifest's `dvn` counts —
     // pure driver arithmetic; only rels the counts don't cover
     // (legacy commits, re-rel'd clones) pay a footer read each
@@ -4860,34 +4865,36 @@ object SnapshotTable {
     // one sidecar per hit file: the file's FULL touched-ordinal set
     // (old sidecar ∪ new hits) — a superseding sidecar, so a reader
     // consults exactly one per file. ALL sidecars land in ONE
-    // partitioned write, hash-distributed on __file across
+    // partitioned write, hash-distributed on the file's index (`__fid`,
+    // a short directory name where the full path would not be) across
     // min(hitFiles, parallelism) tasks (each file's ordinals land in
-    // exactly one task, so each __file= dir still yields ONE part):
+    // exactly one task, so each __fid= dir still yields ONE part):
     // the pre-r14 coalesce(1) serialized a wide spread-delete's whole
     // ordinal set through one task (VERDICT r13 #5).
+    val fids = hitCounts.keys.toSeq.sorted.zipWithIndex.toMap
     val allIdx = (hits.select(col("__idx").as("idx"), col("__file")) +:
       oldSides.toSeq).reduce(_ unionByName _)
+      .select(col("idx"), element_at(typedLit(fids), col("__file")).as("__fid"))
     val scratch = Engine.tmpDir(s"graft_dv_scratch_$tag")
     allIdx
       .repartition(math.max(1, math.min(hitCounts.size,
-        s.sparkContext.defaultParallelism)), col("__file"))
-      .write.mode("overwrite").partitionBy("__file").parquet(scratch)
-    val newDvEntries: Map[String, String] = hitCounts.keys.zipWithIndex.map {
-      case (base, i) =>
-        val dir = Paths.get(scratch, s"__file=$base")
-        val parts = Engine.listDir(dir)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        require(parts.size == 1,
-          s"dv sidecar write produced ${parts.size} parts for $base — expected " +
-            "exactly one (all of a file's ordinals hash to one task)")
-        val rel = s"dvdata_${tag}_$i.parquet"
-        Files.move(parts.head, Paths.get(root, rel), StandardCopyOption.REPLACE_EXISTING)
-        byBase(base).rel -> rel
-    }.toMap
+        s.sparkContext.defaultParallelism)), col("__fid"))
+      .write.mode("overwrite").partitionBy("__fid").parquet(scratch)
+    val newDvEntries: Map[String, String] = fids.map { case (path, i) =>
+      val dir = Paths.get(scratch, s"__fid=$i")
+      val parts = Engine.listDir(dir)
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+      require(parts.size == 1,
+        s"dv sidecar write produced ${parts.size} parts for $path — expected " +
+          "exactly one (all of a file's ordinals hash to one task)")
+      val rel = s"dvdata_${tag}_$i.parquet"
+      Files.move(parts.head, Paths.get(root, rel), StandardCopyOption.REPLACE_EXISTING)
+      byPath(path).rel -> rel
+    }
     // the new sidecars' ordinal totals, recorded beside them (`dvn`)
     // so future budget checks never re-open these footers
-    val newDvCounts: Map[String, Long] = hitCounts.keys.map(base =>
-      byBase(base).rel -> (hitCounts(base) + oldCounts.getOrElse(base, 0L))).toMap
+    val newDvCounts: Map[String, Long] = hitCounts.keys.map(path =>
+      byPath(path).rel -> (hitCounts(path) + oldCounts.getOrElse(path, 0L))).toMap
     // row-tracked: resolve each hit's identity BEFORE the coordinate
     // columns drop — coalesce(materialized __row_id, file base +
     // ordinal), the one reader rule — so the postimage file (and the
@@ -4897,7 +4904,7 @@ object SnapshotTable {
       else {
         import s.implicits._
         val basesDf = broadcast(rowBases(root, v).toSeq.map { case (r, b) =>
-          (Paths.get(r).getFileName.toString, b) }.toDF("__file", "__rt_base"))
+          (fileKey(root, r), b) }.toDF("__file", "__rt_base"))
         hits.join(basesDf, Seq("__file"), "left")
           .withColumn(RowIdCol,
             coalesce(col(RowIdCol), col("__rt_base") + col("__idx")))
@@ -5448,14 +5455,13 @@ object SnapshotTable {
     val dvF = dvState(root, vFrom)
     val dvT = dvState(root, vTo)
     def sideIdx(o: Option[String]): DataFrame = o match {
-      case Some(d) => s.read.parquet(Paths.get(root, d).toString).select(col("idx"))
+      case Some(d) => s.read.schema(DvSidecarSchema).parquet(Paths.get(root, d).toString)
       case None => s.range(0).select(col("id").as("idx"))
     }
     val dvDeltas: Seq[DataFrame] = (from intersect to).toSeq.sorted
       .filter(r => dvF.get(r) != dvT.get(r)).flatMap { rel =>
         def rowsAt(idx: DataFrame, v: Int, ct: String): DataFrame =
-          toLogical(subsetReader(s, root, v)
-              .parquet(Paths.get(root, rel).toString), colMap(root, v))
+          toLogical(scanRels(s, root, v, Seq(rel)), colMap(root, v))
             .withColumn("__idx", col("_metadata.row_index"))
             .join(broadcast(idx.withColumnRenamed("idx", "__idx")),
               Seq("__idx"), "left_semi")
@@ -5531,7 +5537,7 @@ object SnapshotTable {
       val v1 = commitEntries(root, 0, entries, shardSize = 3)
       val lastRel = s"data_g$X18Grp.parquet"
       assert(entries.exists(_.rel == lastRel), s"fixture drift: no $lastRel")
-      val enriched = s.read.parquet(Paths.get(root, lastRel).toString)
+      val enriched = scanRels(s, root, v1, Seq(lastRel))
         .withColumn("quality", col("value") * 0.1)
       val newRel = writeDataFile(enriched, root, "v2_enriched")
       // the widening commit CAPTURES the union schema (all-nullable:
@@ -5672,55 +5678,57 @@ object SnapshotTable {
   /** The values of `values` that file `rel`'s parquet bloom filter on
     * `keyCol` may contain. Sound degradation everywhere: a row group
     * without the column, or without a bloom, may contain ANY value. One
-    * footer + bloom-bitset read per call (KBs) — the planning-time cost
-    * a needle lookup pays instead of scanning the file (MBs–GBs); at
-    * 100 TB a caching layer (or manifest-inlined blooms, the Iceberg
-    * puffin shape) amortizes repeat lookups, but even cold this is a
-    * ~1000× IO reduction per skipped file. */
+    * footer + bloom-bitset read per call (KBs; ~0.4 ms warm on local
+    * disk, the shared read options keep the open itself free) — the
+    * planning-time cost a needle lookup pays instead of scanning the
+    * file (MBs–GBs). At 100 TB the per-file latency is object-store
+    * round trips, which manifest-inlined blooms (the Iceberg puffin
+    * shape) would remove; even so this is a ~1000× IO reduction per
+    * skipped file. */
   private[graft] def bloomMayContain(root: String, rel: String, keyCol: String,
-      values: Seq[Long]): Seq[Long] = {
+      values: Seq[Long]): Seq[Long] =
+    withFooter(root, rel)(bloomProbe(_, keyCol, values))
+
+  /** [[bloomMayContain]] over an OPEN footer. */
+  private def bloomProbe(reader: org.apache.parquet.hadoop.ParquetFileReader,
+      keyCol: String, values: Seq[Long]): Seq[Long] = {
     import scala.jdk.CollectionConverters._
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      values.filter { v =>
-        blocks.exists { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == keyCol) match {
-            case None => true
-            case Some(cc) =>
-              val bf = reader.getBloomFilterDataReader(b).readBloomFilter(cc)
-              // hash at the FILE's physical width: a type-WIDENED key
-              // column leaves old files INT32, whose blooms hashed
-              // 4-byte values — hashing the lookup long against them
-              // would return false NEGATIVES (unsound pruning); a
-              // value outside int range cannot be in an int32 file
-              bf == null || (cc.getPrimitiveType.getPrimitiveTypeName match {
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-                  v >= Int.MinValue && v <= Int.MaxValue &&
-                    bf.findHash(bf.hash(v.toInt))
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-                  bf.findHash(bf.hash(v))
-                // int→double / float→double widenings leave (or land)
-                // floating-point pages whose blooms hashed IEEE bits —
-                // probe at the file's width there too. A long exactly
-                // representable at that width hashes to the stored bits
-                // (no false negatives); an unrepresentable long cannot
-                // have been stored as itself, and the page may still
-                // hold its rounded neighbor — return may-contain, never
-                // a false negative (r14 review)
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.DOUBLE =>
-                  v.toDouble.toLong != v || bf.findHash(bf.hash(v.toDouble))
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
-                  v.toFloat.toLong != v || bf.findHash(bf.hash(v.toFloat))
-                // any other physical width: no sound judgment — keep
-                case _ => true
-              })
-          }
+    val blocks = reader.getFooter.getBlocks.asScala.toSeq
+    values.filter { v =>
+      blocks.exists { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == keyCol) match {
+          case None => true
+          case Some(cc) =>
+            val bf = reader.getBloomFilterDataReader(b).readBloomFilter(cc)
+            // hash at the FILE's physical width: a type-WIDENED key
+            // column leaves old files INT32, whose blooms hashed
+            // 4-byte values — hashing the lookup long against them
+            // would return false NEGATIVES (unsound pruning); a
+            // value outside int range cannot be in an int32 file
+            bf == null || (cc.getPrimitiveType.getPrimitiveTypeName match {
+              case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
+                v >= Int.MinValue && v <= Int.MaxValue &&
+                  bf.findHash(bf.hash(v.toInt))
+              case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
+                bf.findHash(bf.hash(v))
+              // int→double / float→double widenings leave (or land)
+              // floating-point pages whose blooms hashed IEEE bits —
+              // probe at the file's width there too. A long exactly
+              // representable at that width hashes to the stored bits
+              // (no false negatives); an unrepresentable long cannot
+              // have been stored as itself, and the page may still
+              // hold its rounded neighbor — return may-contain, never
+              // a false negative (r14 review)
+              case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.DOUBLE =>
+                v.toDouble.toLong != v || bf.findHash(bf.hash(v.toDouble))
+              case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
+                v.toFloat.toLong != v || bf.findHash(bf.hash(v.toFloat))
+              // any other physical width: no sound judgment — keep
+              case _ => true
+            })
         }
       }
-    } finally reader.close()
+    }
   }
 
   /** Needle lookup: scan ONLY the files whose bloom filter may contain
@@ -5733,25 +5741,32 @@ object SnapshotTable {
       values: Seq[Long]): DataFrame = {
     val v = currentVersion(root)
     val map = colMap(root, v)
-    val entries = manifestEntries(root, v)
+    val rels = manifestEntries(root, v).map(_.rel)
     // keyCol is LOGICAL; parquet blooms are indexed by the files'
     // physical column name
-    val hit = entries.map(_.rel)
-      .filter(rel => bloomMayContain(root, rel,
-        physicalName(map, keyCol), values).nonEmpty)
+    val phys = physicalName(map, keyCol)
+    // ONE footer open per candidate file: the probe keeps the footers
+    // read planning needs (the hits', and the first file's for an
+    // all-miss lookup), so the scan's schema costs no second open
+    val probed = rels.zipWithIndex.flatMap { case (rel, i) =>
+      withFooter(root, rel) { r =>
+        val hit = bloomProbe(r, phys, values).nonEmpty
+        if (hit || i == 0) Some((rel, hit, r.getFooter)) else None
+      }
+    }
+    val footers = probed.map(p => p._1 -> p._3).toMap
+    val hit = probed.collect { case (rel, true, _) => rel }
     if (hit.isEmpty) {
-      // preserve the schema without scanning data pages: one footer on
-      // a uniform table; every footer (still metadata-only) on an
-      // evolved one, where a single file's width is not the union's
+      // preserve the schema without scanning data pages: the first
+      // file's footer on a uniform table; every footer (still
+      // metadata-only) on an evolved one, where a single file's width
+      // is not the union's
       val schemaRels =
-        if (manifestMeta(root, v).contains("schema")) entries.map(_.rel)
-        else entries.take(1).map(_.rel)
-      toLogical(subsetReader(s, root, v)
-        .parquet(schemaRels.map(r => Paths.get(root, r).toString): _*), map)
-        .filter(lit(false))
+        if (manifestMeta(root, v).contains("schema")) rels else rels.take(1)
+      toLogical(scanRels(s, root, v, schemaRels, footers), map).filter(lit(false))
     }
     else
-      toLogical(readRelsDv(s, root, v, hit), map)
+      toLogical(readRelsDv(s, root, v, hit, footers), map)
         .filter(col(keyCol).isin(values: _*))
   }
 
@@ -5918,10 +5933,9 @@ object SnapshotTable {
   def readPrunedBox(s: SparkSession, root: String, primaryCol: String,
       box: Seq[(String, Long, Long)]): DataFrame = {
     val v = currentVersion(root)
-    val files = prunedEntriesBox(root, v, primaryCol, box)
-      .map(e => Paths.get(root, e.rel).toString)
+    val files = prunedEntriesBox(root, v, primaryCol, box).map(_.rel)
     val pred = box.map { case (c, l, h) => col(c).between(l, h) }.reduce(_ && _)
-    subsetReader(s, root, v).parquet(files: _*).filter(pred)
+    scanRels(s, root, v, files).filter(pred)
   }
 
   /** x22's day range (10 mid-month days); the user range is derived

@@ -7,10 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -387,12 +386,9 @@ private[sources] object SnapshotSourceUtil {
     }
   }
 
-  private def footerSchema(root: String, rel: String): MessageType = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(Paths.get(root, rel).toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
+  private def footerSchema(root: String, rel: String): MessageType =
+    ParquetFooters.withFooter(new HadoopPath(Paths.get(root, rel).toUri))(
+      (r, _) => r.getFooter.getFileMetaData.getSchema)
 
   def tableMessageType(root: String): MessageType =
     tableMessageType(root, SnapshotTable.currentVersion(root))
@@ -621,7 +617,7 @@ private[sources] object SnapshotSourceUtil {
   def loadDvSet(path: String): java.util.HashSet[java.lang.Long] = {
     val set = new java.util.HashSet[java.lang.Long]()
     val r = ParquetReader.builder(new GroupReadSupport(), new HadoopPath(path))
-      .withConf(new Configuration()).build()
+      .withConf(ParquetFooters.hadoopConf).build()
     var g = r.read()
     while (g != null) { set.add(g.getLong("idx", 0)); g = r.read() }
     r.close()
@@ -2752,14 +2748,10 @@ private[sources] case class SnapshotReaderFactory(projectedMessage: String,
       // shared request schema
       private val fileMeta: Option[(Map[String, org.apache.parquet.schema.Type], Long)] =
         if (!evolved) None
-        else {
-          val in = HadoopInputFile.fromPath(new HadoopPath(path), new Configuration())
-          val r = ParquetFileReader.open(in)
-          try Some((r.getFooter.getFileMetaData.getSchema.getFields.asScala
+        else ParquetFooters.withFooter(new HadoopPath(path))((r, _) =>
+          Some((r.getFooter.getFileMetaData.getSchema.getFields.asScala
               .map(f => f.getName -> f).toMap,
-            r.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
-          finally r.close()
-        }
+            r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)))
       private val fileRows: Long = fileMeta.fold(0L)(_._2)
       // pruned index i → slot in the per-file request, -1 = absent
       private val slot: Array[Int] = fileMeta match {

@@ -7,15 +7,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale-factor dir passed by the driver; column pruning and filter
   * pushdown happen in the caller's plan and reach the scan because these
   * are plain parquet relations (verified via `.explain("formatted")`:
-  * `PushedFilters`/`ReadSchema`).
+  * `PushedFilters`/`ReadSchema`). Each relation plans under the schema
+  * Spark's inference would give it, read from one footer in-process
+  * ([[ParquetFooters.inferredSchema]]): loading a table launches no job.
   *
   * Capability mapping (public MorphL churning-users pipeline): `events`
   * plays the Google-Analytics hit/session stream the reference ingests;
   * `customer`/`orders` play its user/transaction dimensions.
   */
 object Tables {
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetFooters.inferredSchema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = read(s, d, "nation")

@@ -265,8 +265,7 @@ object SnapshotSink {
         // left_semi below keeps anyway
         val current =
           if (cands.isEmpty) state.filter(lit(false))
-          else ST.subsetReader(s, root, v)
-            .parquet(cands.map(e => Paths.get(root, e.rel).toString): _*)
+          else ST.scanRels(s, root, v, cands.map(_.rel))
         val stateCols = state.columns.filterNot(_ == keyCol)
         // combine column-wise: table row ⊕ batch row where both exist
         val combined = current.as("t").join(state.as("b"), Seq(keyCol), "full_outer")

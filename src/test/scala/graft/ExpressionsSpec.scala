@@ -305,6 +305,36 @@ class ExpressionsSpec extends AnyFunSuite {
       viaInterp.toSeq)
   }
 
+  test("kernel null/NaN contract: null elements (and NaN for the PQ kernels) throw IllegalArgumentException") {
+    val cb = Seq(Seq(Seq(0.0, 0.0), Seq(1.0, 1.0)))
+    def refusal(df: org.apache.spark.sql.DataFrame,
+        c: org.apache.spark.sql.Column): IllegalArgumentException = {
+      val ex = intercept[Exception](df.select(c).collect())
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+        .getOrElse(fail(s"no IllegalArgumentException behind $ex"))
+    }
+    val withNull = Seq(Tuple1(Seq(Some(1.0), None))).toDF("v")
+    val withNaN = Seq(Tuple1(Seq(1.0, Double.NaN))).toDF("v")
+    val pq = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      "pq_encode" -> (graft.functions.pq_encode(_, cb)),
+      "pq_lut" -> (graft.functions.pq_lut(_, cb)))
+    pq.foreach { case (name, f) =>
+      assert(refusal(withNull, f(col("v"))).getMessage.startsWith(s"$name: null element at index 1"))
+      assert(refusal(withNaN, f(col("v"))).getMessage.startsWith(s"$name: NaN element at index 1"))
+    }
+    assert(refusal(withNull, graft.functions.quantize_milli(col("v"))).getMessage
+      .startsWith("quantize_milli: null element at index 1"))
+    // quantize_milli keeps cast(round(NaN) as long)'s answer: 0, no throw
+    assert(withNaN.select(graft.functions.quantize_milli(col("v"))).head().getSeq[Long](0) ==
+      Seq(1000L, 0L))
+    // a null ARRAY is a null result, not an error
+    val nullArr = Seq(Tuple1(Option.empty[Seq[Double]])).toDF("v")
+    val r = nullArr.select(pq.map(_._2(col("v"))) :+
+      graft.functions.quantize_milli(col("v")): _*).head()
+    assert(r.toSeq.forall(_ == null), r.toString)
+  }
+
   test("quantize_milli matches the transform+round formulation exactly (corpus + boundaries, codegen)") {
     def hof(c: org.apache.spark.sql.Column) =
       transform(c, x => round(x.cast("double") * 1000.0, 0).cast("long"))

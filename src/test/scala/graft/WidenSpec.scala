@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** x39's type-widening contracts: metadata-only (zero files move),
   * mixed-width reads correct through BOTH scan routes (Spark parquet
-  * reader via readAt/subsetReader, the DSv2 record reader via the
+  * reader via readAt/scanRels, the DSv2 record reader via the
   * connector), DML over mixed widths, narrowing refusals, and the
   * `widen` reader-feature stamp. */
 class WidenSpec extends AnyFunSuite {
